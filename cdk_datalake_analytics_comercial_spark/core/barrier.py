@@ -12,7 +12,7 @@ recompute into cluster-storage residency and blinds the planner downstream.
 ``shared_barrier`` therefore gates every barrier on the subtree's KNOWN
 source input size (the sum of file-relation leaf sizes in the optimized
 plan — the one size estimate Spark gets right). Subtrees fed by more than
-``SPARK_GRAFT_BARRIER_MAX_INPUT`` bytes (default 16 GiB) pass through
+``BARRIER_MAX_INPUT`` bytes (16 GiB) pass through
 un-barriered and are recomputed per consumer; everything at tested scales
 (sf0.001-sf1) stays far under the bound, so bench plans are unchanged.
 Leaves with no usable estimate (a relation whose stats fall back to
@@ -22,7 +22,7 @@ In practice Spark 4.1 exposes real sizes for both file relations and
 checkpointed LogicalRDD leaves, so chained barriers are gated on real
 estimates too (pinned by tests/test_barrier.py).
 
-The 16 GiB default is sized for the production shape this engine targets
+The 16 GiB bound is sized for the production shape this engine targets
 (guide §5): a barriered frame is replicated nowhere (one block per
 partition), disk-backed when memory is short, so 16 GiB is a small, bounded
 fraction of any cluster that can run the 100 TB workload at all — while a
@@ -32,22 +32,14 @@ from columnar parquet (with pruning and pushdown) beats residency.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
-_DEFAULT_MAX_INPUT = 16 * 1024**3
+BARRIER_MAX_INPUT = 16 * 1024**3
 
 # Any leaf claiming at least this many bytes is an "unknown" placeholder
 # (Spark's defaultSizeInBytes for relations without stats is Long.MaxValue
 # or a product of it), never a real file size.
 _UNKNOWN_FLOOR = 1 << 60
-
-
-def barrier_max_input_bytes() -> int:
-    return int(
-        os.environ.get("SPARK_GRAFT_BARRIER_MAX_INPUT", _DEFAULT_MAX_INPUT)
-    )
 
 
 def known_input_bytes(df: DataFrame) -> int:
@@ -68,8 +60,8 @@ def known_input_bytes(df: DataFrame) -> int:
 
 def shared_barrier(df: DataFrame) -> DataFrame:
     """``df.localCheckpoint(eager=False)`` when the subtree's known input
-    is under :func:`barrier_max_input_bytes`; ``df`` unchanged (recompute
-    per consumer) otherwise."""
-    if known_input_bytes(df) > barrier_max_input_bytes():
+    is under ``BARRIER_MAX_INPUT``; ``df`` unchanged (recompute per
+    consumer) otherwise."""
+    if known_input_bytes(df) > BARRIER_MAX_INPUT:
         return df
     return df.localCheckpoint(eager=False)

@@ -2,7 +2,8 @@
 
 Replaces the reference's Glue-coupled session construction
 (`artifacts/aws-glue/layer/common_jobs_functions.py:109-120`): Delta extension
-confs are dropped (storage is parquet-native here), the reference's dynamic
+confs are dropped (tables are written in the engine's own txlog format,
+``sources/txlog.py``, with no Spark extension to load), the reference's dynamic
 partition overwrite + schema-tolerant merge semantics are preserved via
 native Spark confs, and the datetime-rebase confs survive as CORRECTED (the
 reference pins LEGACY for pre-Gregorian ERP dates; our data model documents

@@ -151,22 +151,7 @@ def connected_components(
     # paid that materialization anyway, so the count is effectively free
     n_nodes = labels.count()
     if broadcast_max_nodes is None:
-        # Derive from the session's broadcast budget instead of a fixed
-        # node count (ADVICE r13): a broadcast label relation costs well
-        # over its raw 16 B/node once the hash relation and the driver
-        # copy are counted, so allow ~32 B/node against 8x the configured
-        # autoBroadcastJoinThreshold (the deliberate-hint headroom; the
-        # planner alone would never broadcast these stat-less frames).
-        # Default threshold 10 MB -> ~2.5M nodes; still overridable.
-        try:
-            thr = int(
-                pairs.sparkSession.conf.get(
-                    "spark.sql.autoBroadcastJoinThreshold"
-                )
-            )
-        except Exception:
-            thr = 10 * 1024 * 1024
-        broadcast_max_nodes = max(0, (8 * max(thr, 0)) // 32)
+        broadcast_max_nodes = _broadcast_node_budget(pairs.sparkSession)
     bcast = n_nodes <= broadcast_max_nodes
 
     for _ in range(max_iter):
@@ -183,6 +168,22 @@ def connected_components(
             break
 
     return labels.select("node", F.col("label").alias("component"))
+
+
+def _broadcast_node_budget(spark) -> int:
+    """Label-relation node count the CC rounds may broadcast, derived from
+    the session's broadcast budget instead of a fixed node count: a
+    broadcast label relation costs well over its raw 16 B/node once the
+    hash relation and the driver copy are counted, so allow ~32 B/node
+    against 8x the configured autoBroadcastJoinThreshold (the
+    deliberate-hint headroom; the planner alone would never broadcast these
+    stat-less frames). Default threshold 10 MB -> ~2.5M nodes; a disabled
+    threshold (-1) broadcasts nothing. The threshold comes parsed from the
+    session's SQLConf: the raw conf string carries a unit suffix
+    (``10485760b``, ``20MB``) that ``int()`` cannot read."""
+    conf = spark._jsparkSession.sessionState().conf()
+    thr = int(conf.autoBroadcastJoinThreshold())
+    return max(0, (8 * max(thr, 0)) // 32)
 
 
 def cc_round(

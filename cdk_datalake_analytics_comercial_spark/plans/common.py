@@ -55,6 +55,16 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def lake_db(sf_dir: str) -> str:
+    """The catalog database the SQL-serving plans register ``sf_dir``'s
+    tables under: one per data directory, stable across sessions."""
+    import hashlib
+
+    return "lake_" + hashlib.sha1(
+        os.path.abspath(sf_dir).encode()
+    ).hexdigest()[:8]
+
+
 def period_yyyymm(col: Column | str) -> Column:
     """``yyyyMM`` period string via integer date arithmetic —
     ``(year·100 + month) :: string`` is byte-identical to

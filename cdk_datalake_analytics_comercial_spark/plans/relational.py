@@ -20,7 +20,7 @@ from ..functions.transforms import (
     fn_transform_Concatenate,
 )
 from ..operators.relational import rolling_range_join, rolling_window, top1_per_group
-from .common import period_yyyymm, dmul2, dsum, dsum_to_double, t
+from .common import lake_db, period_yyyymm, dmul2, dsum, dsum_to_double, t
 from ..core.barrier import shared_barrier
 
 # --------------------------------------------------------------------------
@@ -1144,6 +1144,9 @@ SELECT p_partkey, 'retailprice', p_retailprice FROM part
 """
 
 
+GLOBAL_WINDOW_MAX_INPUT = 4 * 1024**3
+
+
 def _staged_global_order(df: DataFrame) -> bool:
     """Strategy gate for the two exact global-order queries (deciles /
     pareto): below the threshold the classic single-partition Window is
@@ -1152,18 +1155,13 @@ def _staged_global_order(df: DataFrame) -> bool:
     the staged range-bucket shape wins. Gated on the KNOWN source input
     bytes of the plan (file-relation leaves), like the CC broadcast gate
     (operators/graph.py) — strategy only, results bit-identical (pinned by
-    test_global_order_staged_matches_single_partition and the oracle runs
-    with the env forced both ways). Default 4 GiB: a one-task sort of the
+    tests/test_global_order.py with the bound forced both ways). The
+    bound, ``GLOBAL_WINDOW_MAX_INPUT``, is 4 GiB: a one-task sort of the
     per-key grain of ≤4 GiB of source parquet is seconds; a 100 TB fact
     table is ~5 orders of magnitude past it."""
-    import os
-
     from ..core.barrier import known_input_bytes
 
-    limit = int(
-        os.environ.get("SPARK_GRAFT_GLOBAL_WINDOW_MAX_INPUT", 4 * 1024**3)
-    )
-    return known_input_bytes(df) > limit
+    return known_input_bytes(df) > GLOBAL_WINDOW_MAX_INPUT
 
 
 def _order_buckets(df: DataFrame, col: Column, nb: int) -> Column:
@@ -2910,14 +2908,9 @@ def _serving_db(spark: SparkSession, sf_dir: str) -> str:
     """Register the testdata tables of ``sf_dir`` as external tables in a
     per-directory database; returns the database name. Idempotent and
     metadata-only — re-registration never touches data."""
-    import hashlib
-    import os
-
     from ..core.sql_serving import register_sql_dir
 
-    db = "lake_" + hashlib.sha1(
-        os.path.abspath(sf_dir).encode()
-    ).hexdigest()[:8]
+    db = lake_db(sf_dir)
     register_sql_dir(spark, sf_dir, db)
     return db
 

@@ -211,8 +211,8 @@ def run_waves(
     derived from the provisioned vCPUs (:func:`shuffle_partitions_for`)
     and a ``spark.scheduler.pool`` named after the worker class, so under
     FAIR scheduling a wave's big fact jobs cannot starve the small master
-    jobs. Parent-session conf overrides (table format routing, etc.) are
-    copied into the child session first.
+    jobs. Parent-session runtime conf overrides are copied into the child
+    session first.
 
     A failed job marks its result and (fail_fast=False, the reference's
     behavior — each SF branch fails independently) lets the remaining jobs
@@ -234,8 +234,7 @@ def run_waves(
         parent = ctx.spark
         child = parent.newSession()
         # newSession starts from SparkConf defaults: carry over the
-        # parent's explicit runtime overrides (e.g. the txlog format
-        # routing conf) before applying the sizing
+        # parent's explicit runtime overrides before applying the sizing
         for r in parent.sql("SET").collect():
             try:
                 child.conf.set(r["key"], r["value"])

@@ -3,12 +3,12 @@ DynamoDB status rows (`common_jobs_functions.py:608-654`: each job logs its
 table, status and timing; the engine adds ROW COUNTS, which the reference
 never had).
 
-Mechanism: every writer choke point (`writer.write_table`,
-`writer._stage_and_swap`, `txlog._write_batch`) attaches a Spark
-``Observation`` (``df.observe(obs, count(*))``) to the DataFrame it is
-about to write. Observations piggyback on the write action itself — the
-count is collected DURING the job Spark already runs, no second scan, no
-extra action. The runner opens a :func:`collect_writes` scope around each
+Mechanism: the single writer choke point (`txlog._write_batch`, which
+every table write goes through) attaches a Spark ``Observation``
+(``df.observe(obs, count(*))``) to the DataFrame it is about to write.
+Observations piggyback on the write action itself — the count is
+collected DURING the job Spark already runs, no second scan, no extra
+action. The runner opens a :func:`collect_writes` scope around each
 job callable (thread-confined via ``contextvars`` — wave-parallel jobs on
 the shared session don't cross-talk), and the totals land in the job's
 status-log line as ``rows_written`` / ``writes``.

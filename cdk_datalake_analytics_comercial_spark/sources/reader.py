@@ -1,9 +1,10 @@
 """Table readers: layered parquet scan, multi-instance union, CSV, JDBC.
 
 Replaces `common_jobs_functions.py:222-277` (``read_table``) minus the AWS
-coupling. Storage format is parquet (columnar, predicate-pushdown +
-partition-pruning capable); the catalog abstracts the path scheme so the same
-code runs on local FS and ``s3a://``.
+coupling. Engine-written tables are txlog tables; stage and raw inputs from
+the extractor are plain parquet dirs, so every scan probes the format. The
+catalog abstracts the path scheme so the same code runs on local FS and
+``s3a://``.
 
 Scale notes:
 - The multi-instance union is a metadata-only plan operation (``unionByName``
@@ -60,7 +61,7 @@ def read_table(
 ) -> DataFrame:
     """Read a layer table.
 
-    - Single-instance layers (domain/analytics): one parquet dir scan
+    - Single-instance layers (domain/analytics): one table scan
       (reference S1, `common_jobs_functions.py:271`).
     - Stage: one dir per source endpoint; all instances are read and
       ``unionByName``-ed (reference S2, `:231-268`, union at `:268`).

@@ -3518,6 +3518,45 @@ def _merge_apply_clauses(
     return joined.filter(keep).select(*(value_of(c) for c in tgt_cols))
 
 
+def _dedup_on_keys(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Keep one row per key tuple. Uses a deterministic arbitrary pick
+    (max over a stable struct of the remaining columns) so repeated runs
+    agree — the reference's upstream W1 dedup makes this a no-op normally."""
+    other = [c for c in df.columns if c not in keys]
+    if not other:
+        return df.dropDuplicates(keys)
+    packed = df.select(*keys, F.struct(*other).alias("_rest"))
+    picked = packed.groupBy(*keys).agg(F.max("_rest").alias("_rest"))
+    return picked.select(*keys, *[F.col(f"_rest.{c}").alias(c) for c in other])
+
+
+def _evolve_schemas(
+    target: DataFrame, source: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Schema evolution for MERGE (the reference's
+    ``spark.databricks.delta.schema.autoMerge.enabled=true``,
+    `common_jobs_functions.py:116`): the merged schema is the UNION of
+    target and source columns; either side is null-padded (typed) for
+    columns only the other has. Column types come from whichever side owns
+    the column (target wins when both have it — Delta rejects type changes,
+    we keep the target's)."""
+    t_fields = {f.name: f for f in target.schema.fields}
+    s_fields = {f.name: f for f in source.schema.fields}
+    ordered = list(t_fields) + [c for c in s_fields if c not in t_fields]
+
+    def pad(df: DataFrame, have: dict) -> DataFrame:
+        cols = []
+        for name in ordered:
+            if name in have:
+                cols.append(F.col(name))
+            else:
+                other = t_fields.get(name) or s_fields[name]
+                cols.append(F.lit(None).cast(other.dataType).alias(name))
+        return df.select(*cols)
+
+    return pad(target, t_fields), pad(source, s_fields)
+
+
 def tx_merge(
     spark: SparkSession,
     source: DataFrame,
@@ -3533,8 +3572,9 @@ def tx_merge(
 ) -> int:
     """File-pruned MERGE (K3): rewrite only the partitions the source
     touches; untouched partitions' files are carried forward by reference.
-    Update semantics match ``writer.merge_upsert`` (source wins; with
-    ``precedence`` last-writer-wins).
+    Without ``clauses``, matched rows take the source row (with
+    ``precedence``, last-writer-wins, the source winning ties) and
+    duplicate source keys collapse to one row first.
 
     ``use_dv=True`` is Delta's MERGE-with-deletion-vectors (the fix for
     merge write amplification): instead of rewriting every file of the
@@ -3575,8 +3615,6 @@ def tx_merge(
     string parameter, or column-mapped tables. A ``not_matched_by_source``
     clause — or a source missing any partition column — forfeits
     partition pruning (global rewrite), never correctness."""
-    from .writer import _dedup_on_keys
-
     if use_dv and schema_evolution:
         raise ValueError(
             "tx_merge: schema_evolution with use_dv is not supported — "
@@ -3685,8 +3723,6 @@ def tx_merge(
         slice_df = tx_read(spark, path, cur)
 
     if schema_evolution and slice_df is not None:
-        from .writer import _evolve_schemas
-
         slice_df, source = _evolve_schemas(slice_df, source)
 
     if global_replace and slice_df is not None and clauses is None:
@@ -3833,8 +3869,6 @@ def _dv_merge(
     ``precedence`` against the matched target rows. Unmatched rows in
     affected files are untouched; write volume is O(matched + source),
     not O(touched partitions)."""
-    from .writer import _dedup_on_keys
-
     manifest = read_manifest(spark, path, cur)
     mapping = _schema_mapping(manifest["schema"])
     mapped = not _mapping_is_identity(mapping)
@@ -4081,6 +4115,20 @@ def tx_clone(spark: SparkSession, src: str, dst: str, version: int | None = None
     return _commit(spark, dst, build)
 
 
+def plain_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
+    """(relative path, size bytes) of the parquet data files under ``path``
+    that no txlog layout owns — the files :func:`tx_convert` adopts. Empty
+    when ``path`` does not exist."""
+    root = path.rstrip("/")
+    if not _exists(spark, root):
+        return []
+    return [
+        (rel, size)
+        for rel, size in _list_parquet_files(spark, root)
+        if not rel.startswith((f"{_DATA}/", f"{_LOG}/", f"{_DV}/"))
+    ]
+
+
 def tx_convert(
     spark: SparkSession,
     path: str,
@@ -4108,11 +4156,7 @@ def tx_convert(
     root = path.rstrip("/")
     if current_version(spark, root) is not None:
         raise FileExistsError(f"{root} is already a txlog table")
-    listed = [
-        (rel, size)
-        for rel, size in _list_parquet_files(spark, root)
-        if not rel.startswith((f"{_DATA}/", f"{_LOG}/", f"{_DV}/"))
-    ]
+    listed = plain_parquet_files(spark, root)
     if not listed:
         raise FileNotFoundError(f"no parquet data files under {root}")
     want = sorted(partition_by or [])

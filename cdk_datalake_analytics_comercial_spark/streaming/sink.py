@@ -1,11 +1,11 @@
-"""Streaming lake sink: continuous MERGE-upsert into a keyed parquet table.
+"""Streaming lake sink: continuous MERGE-upsert into a keyed txlog table.
 
 Structured Streaming's built-in file sink is append-only; a CDC-shaped
 stream (late corrections, re-emitted keys) needs MERGE semantics at the
 sink. The standard Spark pattern is ``foreachBatch``: each micro-batch is
 handed to the batch merge writer (``sources/writer.merge_upsert`` — the K3
-operator, crash-safe staging-dir commit), so the streaming path reuses the
-exact, tested batch merge.
+operator, one atomic txlog commit per batch), so the streaming path reuses
+the exact, tested batch merge.
 
 Delivery semantics: the file source + checkpoint give at-least-once batch
 delivery; MERGE on the business keys makes the sink write IDEMPOTENT per

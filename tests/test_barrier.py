@@ -2,8 +2,8 @@
 bench scale, pass through for corpus-sized inputs, and unknown leaf sizes
 (checkpointed RDDs) keep the conservative barrier."""
 
+from cdk_datalake_analytics_comercial_spark.core import barrier as B
 from cdk_datalake_analytics_comercial_spark.core.barrier import (
-    barrier_max_input_bytes,
     known_input_bytes,
     shared_barrier,
 )
@@ -18,7 +18,7 @@ def _df(spark, tmp_path):
 def test_barrier_kept_under_bound(spark, tmp_path):
     df = _df(spark, tmp_path)
     est = known_input_bytes(df)
-    assert 0 < est < barrier_max_input_bytes()
+    assert 0 < est < B.BARRIER_MAX_INPUT
     b = shared_barrier(df)
     assert b is not df  # checkpointed
     assert b.count() == 98
@@ -26,7 +26,7 @@ def test_barrier_kept_under_bound(spark, tmp_path):
 
 def test_barrier_skipped_over_bound(spark, tmp_path, monkeypatch):
     df = _df(spark, tmp_path)
-    monkeypatch.setenv("SPARK_GRAFT_BARRIER_MAX_INPUT", "1")
+    monkeypatch.setattr(B, "BARRIER_MAX_INPUT", 1)
     assert shared_barrier(df) is df  # recompute-per-consumer fallback
 
 
@@ -36,6 +36,6 @@ def test_barrier_gate_sees_through_checkpoints(spark, tmp_path, monkeypatch):
     # leaves until materialized — either way the gate has a real estimate
     # for chained barriers instead of an unknown placeholder
     df = _df(spark, tmp_path).localCheckpoint(eager=True).groupBy().count()
-    assert 0 < known_input_bytes(df) < barrier_max_input_bytes()
-    monkeypatch.setenv("SPARK_GRAFT_BARRIER_MAX_INPUT", "1")
+    assert 0 < known_input_bytes(df) < B.BARRIER_MAX_INPUT
+    monkeypatch.setattr(B, "BARRIER_MAX_INPUT", 1)
     assert shared_barrier(df) is df  # known size over the tiny bound

@@ -21,6 +21,7 @@ from cdk_datalake_analytics_comercial_spark.runner import (
     run_waves,
 )
 from cdk_datalake_analytics_comercial_spark.sources.registry import SchemaRegistry
+from cdk_datalake_analytics_comercial_spark.sources.txlog import tx_read
 
 AS_OF = dt.date(2025, 5, 15)
 
@@ -76,7 +77,7 @@ def _mk(spark, lake):
 def _ids(spark, lake, layer, table):
     return sorted(
         r["doc_id"]
-        for r in spark.read.parquet(lake.table_path(layer, table))
+        for r in tx_read(spark, lake.table_path(layer, table))
         .select("doc_id").collect()
     )
 
@@ -96,7 +97,7 @@ def test_corpus_pipeline_end_to_end(spark, corpus_lake):
     assert _ids(spark, lake, Layer.DOMAIN, "corpus_clean") == [1, 2, 3]
 
     chunks = (
-        spark.read.parquet(lake.table_path(Layer.ANALYTICS, "corpus_chunks"))
+        tx_read(spark, lake.table_path(Layer.ANALYTICS, "corpus_chunks"))
         .collect()
     )
     by_doc: dict[int, list] = {}
@@ -111,13 +112,13 @@ def test_corpus_pipeline_end_to_end(spark, corpus_lake):
             assert 1 <= r["n_tokens"] <= 256
             assert len(r["chunk_text"].split(" ")) == r["n_tokens"]
 
-    pack = spark.read.parquet(lake.table_path(Layer.ANALYTICS, "corpus_pack")).collect()
+    pack = tx_read(spark, lake.table_path(Layer.ANALYTICS, "corpus_pack")).collect()
     assert sorted(r["doc_id"] for r in pack) == [1, 2, 3]
     for r in pack:
         assert 0 <= r["bin_offset"] < 2048 and r["bin_id"] >= 0
 
     stats = (
-        spark.read.parquet(lake.table_path(Layer.ANALYTICS, "corpus_stats"))
+        tx_read(spark, lake.table_path(Layer.ANALYTICS, "corpus_stats"))
         .collect()
     )
     # doc tokens: 1 → 123, 2 → 152, 3 → 91 → buckets 7, 8, 7
@@ -148,7 +149,7 @@ def test_corpus_pipeline_rerun_idempotent(spark, corpus_lake):
         first.values(),
     ):
         assert _ids(spark, lake, layer, t) == ids
-    n_chunks = spark.read.parquet(
+    n_chunks = tx_read(spark,
         lake.table_path(Layer.ANALYTICS, "corpus_chunks")
     ).count()
     assert n_chunks > 0
@@ -170,7 +171,7 @@ def test_corpus_decontam_drops_benchmark_overlap(spark, corpus_lake):
     assert _ids(spark, lake, Layer.DOMAIN, "corpus_clean") == [1, 2]
     chunk_docs = {
         r["doc_id"]
-        for r in spark.read.parquet(
+        for r in tx_read(spark,
             lake.table_path(Layer.ANALYTICS, "corpus_chunks")
         ).collect()
     }

@@ -9,6 +9,7 @@ from cdk_datalake_analytics_comercial_spark.core.catalog import Layer
 from cdk_datalake_analytics_comercial_spark.jobs import ANALYTICS_JOBS, DOMAIN_JOBS
 from cdk_datalake_analytics_comercial_spark.runner import JobConfig, JobContext, run_waves
 from cdk_datalake_analytics_comercial_spark.sources.registry import SchemaRegistry
+from cdk_datalake_analytics_comercial_spark.sources.txlog import tx_read
 
 AS_OF = dt.date(2025, 5, 15)
 TS = dt.datetime(2025, 4, 1)
@@ -60,13 +61,13 @@ def test_forma_pago_family_chain_and_idempotence(spark, lake):
         ar = run_waves([JobConfig("analytics", "dim_forma_pago_lite", 1)], ANALYTICS_JOBS, mk)
         assert ar[0].status == "succeeded", ar[0].error
 
-    dom = {r["id_forma_pago"]: r for r in spark.read.parquet(
+    dom = {r["id_forma_pago"]: r for r in tx_read(spark,
         lake.table_path(Layer.DOMAIN, "m_forma_pago")).collect()}
     assert set(dom) == {"10|CONT", "10|CRED"}
     assert dom["10|CONT"]["nomb_forma_pago"] == "CONTADO"
     assert dom["10|CONT"]["fecha_creacion"] == dt.date(2025, 4, 1)  # DateType cast
 
-    dim = {r["id_forma_pago"]: r for r in spark.read.parquet(
+    dim = {r["id_forma_pago"]: r for r in tx_read(spark,
         lake.table_path(Layer.ANALYTICS, "dim_forma_pago")).collect()}
     assert set(dim) == {"10|CONT", "10|CRED"}          # idempotent rerun, no dupes
     assert dim["10|CRED"]["desc_forma_pago"] == "CREDITO 30D"  # renamed downstream
@@ -101,7 +102,7 @@ def test_medio_transporte_numeric_attrs(spark, lake):
     )
     assert ar[0].status == "succeeded", ar[0].error
 
-    r = spark.read.parquet(lake.table_path(Layer.ANALYTICS, "dim_medio_transporte")).collect()[0]
+    r = tx_read(spark, lake.table_path(Layer.ANALYTICS, "dim_medio_transporte")).collect()[0]
     assert r["id_medio_transporte"] == "10|V01"
     assert r["cant_peso_maximo"] == 10000
     assert r["cant_tarimas"] == Decimal("12.000000000000")
@@ -120,7 +121,7 @@ def test_dim_pais_null_placeholder(spark, lake):
 
     ar = run_waves([JobConfig("analytics", "dim_pais_lite", 1)], ANALYTICS_JOBS, mk)
     assert ar[0].status == "succeeded", ar[0].error
-    r = spark.read.parquet(lake.table_path(Layer.ANALYTICS, "dim_pais")).collect()[0]
+    r = tx_read(spark, lake.table_path(Layer.ANALYTICS, "dim_pais")).collect()[0]
     assert r["desc_pais"] == "PERU"
     assert r["desc_pais_comercial"] is None        # lit(NULL) placeholder column
     assert dict(r.asDict())["cod_pais"] == "PE"
@@ -163,7 +164,7 @@ def test_m_tipo_venta_dcv_whitelist_and_default(spark, lake):
 
     dr = run_waves([JobConfig("domain", "m_tipo_venta_lite", 1)], DOMAIN_JOBS, mk)
     assert dr[0].status == "succeeded", dr[0].error
-    rows = spark.read.parquet(lake.table_path(Layer.DOMAIN, "m_tipo_venta")).collect()
+    rows = tx_read(spark, lake.table_path(Layer.DOMAIN, "m_tipo_venta")).collect()
     assert len(rows) == 1                              # GUI (non-DCV) dropped
     r = rows[0]
     assert r["id_tipo_venta"] == "10|FAC|P01"
@@ -173,7 +174,7 @@ def test_m_tipo_venta_dcv_whitelist_and_default(spark, lake):
 
     ar = run_waves([JobConfig("analytics", "dim_tipo_venta_lite", 1)], ANALYTICS_JOBS, mk)
     assert ar[0].status == "succeeded", ar[0].error
-    d = spark.read.parquet(lake.table_path(Layer.ANALYTICS, "dim_tipo_venta")).collect()[0]
+    d = tx_read(spark, lake.table_path(Layer.ANALYTICS, "dim_tipo_venta")).collect()[0]
     assert d["desc_tipo_venta"] == "ninguno"           # renamed downstream
 
 
@@ -200,7 +201,7 @@ def test_m_almacen_id_passthrough_no_dates(spark, lake):
 
     dr = run_waves([JobConfig("domain", "m_almacen_lite", 1)], DOMAIN_JOBS, mk)
     assert dr[0].status == "succeeded", dr[0].error
-    df = spark.read.parquet(lake.table_path(Layer.DOMAIN, "m_almacen"))
+    df = tx_read(spark, lake.table_path(Layer.DOMAIN, "m_almacen"))
     r = df.collect()[0]
     assert r["id_almacen"] == "10|S1|A01"              # passthrough, not re-minted
     assert r["id_compania"] == "10"
@@ -229,7 +230,7 @@ def test_m_fuerza_venta_trims_char_padded_code(spark, lake):
 
     dr = run_waves([JobConfig("domain", "m_fuerza_venta_lite", 1)], DOMAIN_JOBS, mk)
     assert dr[0].status == "succeeded", dr[0].error
-    r = spark.read.parquet(lake.table_path(Layer.DOMAIN, "m_fuerza_venta")).collect()[0]
+    r = tx_read(spark, lake.table_path(Layer.DOMAIN, "m_fuerza_venta")).collect()[0]
     assert r["cod_fuerza_venta"] == "FV1"              # trimmed
     assert r["desc_fuerza_venta"] == "PREVENTA"
 
@@ -256,7 +257,7 @@ def test_m_lista_precio_clock_dates(spark, lake):
 
     dr = run_waves([JobConfig("domain", "m_lista_precio_lite", 1)], DOMAIN_JOBS, mk)
     assert dr[0].status == "succeeded", dr[0].error
-    r = spark.read.parquet(lake.table_path(Layer.DOMAIN, "m_lista_precio")).collect()[0]
+    r = tx_read(spark, lake.table_path(Layer.DOMAIN, "m_lista_precio")).collect()[0]
     assert r["cod_lista_precio"] == "LP1"              # trimmed
     assert r["nomb_lista_precio"] == "LISTA GENERAL"
     assert r["fecha_creacion"] == AS_OF                # injected clock, DateType
@@ -286,7 +287,7 @@ def test_m_sucursal_null_placeholders_and_date_cast(spark, lake):
 
     dr = run_waves([JobConfig("domain", "m_sucursal_lite", 1)], DOMAIN_JOBS, mk)
     assert dr[0].status == "succeeded", dr[0].error
-    r = spark.read.parquet(lake.table_path(Layer.DOMAIN, "m_sucursal")).collect()[0]
+    r = tx_read(spark, lake.table_path(Layer.DOMAIN, "m_sucursal")).collect()[0]
     assert r["id_sucursal"] == "10|S1"                 # minted compania|sucursal
     assert r["id_sucursal_ref"] is None                # NULL placeholder
     assert r["cod_tipo_sucursal"] is None
@@ -315,7 +316,7 @@ def test_m_modelo_atencion_id_compania_join_and_distinct(spark, lake):
 
     dr = run_waves([JobConfig("domain", "m_modelo_atencion_lite", 1)], DOMAIN_JOBS, mk)
     assert dr[0].status == "succeeded", dr[0].error
-    rows = spark.read.parquet(lake.table_path(Layer.DOMAIN, "m_modelo_atencion")).collect()
+    rows = tx_read(spark, lake.table_path(Layer.DOMAIN, "m_modelo_atencion")).collect()
     assert len(rows) == 1                              # distinct() dedup
     r = rows[0]
     assert r["id_modelo_atencion"] == "10|MA1"
@@ -344,7 +345,7 @@ def test_dim_producto_passthrough_renames(spark, lake):
 
     ar = run_waves([JobConfig("analytics", "dim_producto_lite", 1)], ANALYTICS_JOBS, mk)
     assert ar[0].status == "succeeded", ar[0].error
-    r = spark.read.parquet(lake.table_path(Layer.ANALYTICS, "dim_producto")).collect()[0]
+    r = tx_read(spark, lake.table_path(Layer.ANALYTICS, "dim_producto")).collect()[0]
     assert r["id_producto"] == "10|A1"                 # id_articulo renamed
     assert r["cod_producto"] == "A1"
     assert r["desc_producto"] == "BIG COLA 1L"

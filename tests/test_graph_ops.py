@@ -148,3 +148,21 @@ def test_broadcast_round_strategy_matches_smj(spark):
     )
     bcast = sorted(map(tuple, connected_components(pairs).collect()))
     assert smj == bcast and len(smj) > 0
+
+
+def test_broadcast_node_budget_follows_threshold(spark):
+    """The CC broadcast budget scales with autoBroadcastJoinThreshold, read
+    with its unit suffix ('20MB', Spark's default '10485760b') parsed —
+    doubling the threshold doubles the node budget."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "10MB")
+        base = graph._broadcast_node_budget(spark)
+        assert base == 8 * 10 * 1024 * 1024 // 32
+        spark.conf.set(key, "20MB")
+        assert graph._broadcast_node_budget(spark) == 2 * base
+        spark.conf.set(key, "-1")
+        assert graph._broadcast_node_budget(spark) == 0
+    finally:
+        spark.conf.set(key, old)

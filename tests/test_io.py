@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from cdk_datalake_analytics_comercial_spark.core.catalog import Catalog, Layer
 from cdk_datalake_analytics_comercial_spark.sources.reader import read_table, table_exists
 from cdk_datalake_analytics_comercial_spark.sources.registry import SchemaRegistry, parse_type
+from cdk_datalake_analytics_comercial_spark.sources.txlog import tx_read
 from cdk_datalake_analytics_comercial_spark.sources.writer import (
     insert_into_table,
     merge_update_only,
@@ -82,7 +83,7 @@ def test_dynamic_partition_overwrite_isolation(spark, lake):
         [("PE", "202402", 99)], "id_pais string, id_periodo string, v int"
     )
     write_table(patch, path, ["id_pais", "id_periodo"])
-    out = spark.read.parquet(path).select("id_pais", "id_periodo", "v")
+    out = tx_read(spark, path).select("id_pais", "id_periodo", "v")
     assert rows(out) == [("CO", "202401", 3), ("PE", "202401", 1), ("PE", "202402", 99)]
 
 
@@ -91,7 +92,7 @@ def test_append(spark, lake):
     df = spark.createDataFrame([(1,)], "v int")
     write_table(df, path)
     insert_into_table(spark.createDataFrame([(2,)], "v int"), path)
-    assert rows(spark.read.parquet(path)) == [(1,), (2,)]
+    assert rows(tx_read(spark, path)) == [(1,), (2,)]
 
 
 def test_merge_upsert_semantics(spark, lake):
@@ -104,7 +105,7 @@ def test_merge_upsert_semantics(spark, lake):
         [("k2", "PE", 20), ("k3", "PE", 30)], "id string, id_pais string, v int"
     )
     merge_upsert(spark, src, path, keys=["id"], partition_by=["id_pais"])
-    out = spark.read.parquet(path).select("id", "id_pais", "v")
+    out = tx_read(spark, path).select("id", "id_pais", "v")
     assert rows(out) == [("k1", "PE", 1), ("k2", "PE", 20), ("k3", "PE", 30)]
 
 
@@ -114,9 +115,9 @@ def test_merge_upsert_idempotent(spark, lake):
         [("a", "PE", 1), ("b", "CO", 2)], "id string, id_pais string, v int"
     )
     merge_upsert(spark, src, path, keys=["id"], partition_by=["id_pais"])
-    first = rows(spark.read.parquet(path).select("id", "id_pais", "v"))
+    first = rows(tx_read(spark, path).select("id", "id_pais", "v"))
     merge_upsert(spark, src, path, keys=["id"], partition_by=["id_pais"])
-    second = rows(spark.read.parquet(path).select("id", "id_pais", "v"))
+    second = rows(tx_read(spark, path).select("id", "id_pais", "v"))
     assert first == second == [("a", "PE", 1), ("b", "CO", 2)]
 
 
@@ -133,7 +134,7 @@ def test_merge_untouched_partitions_survive(spark, lake):
         keys=["id"],
         partition_by=["id_pais"],
     )
-    out = spark.read.parquet(path).select("id", "id_pais", "v")
+    out = tx_read(spark, path).select("id", "id_pais", "v")
     assert rows(out) == [("a", "PE", 10), ("b", "CO", 2)]
 
 
@@ -145,7 +146,7 @@ def test_merge_source_dedup(spark, lake):
         [("a", "PE", 1), ("a", "PE", 2)], "id string, id_pais string, v int"
     )
     merge_upsert(spark, src, path, keys=["id"], partition_by=["id_pais"])
-    out = spark.read.parquet(path)
+    out = tx_read(spark, path)
     assert out.count() == 1
 
 
@@ -156,9 +157,62 @@ def test_merge_update_only(spark, lake):
     )
     src = spark.createDataFrame([("b", 20), ("c", 30)], "id string, v int")
     merge_update_only(spark, src, path, keys=["id"])
-    out = spark.read.parquet(path).select("id", "v")
+    out = tx_read(spark, path).select("id", "v")
     # b updated, c NOT inserted (whenMatchedUpdateAll only)
     assert rows(out) == [("a", 1), ("b", 20)]
+
+
+def test_writers_keep_rows_of_existing_plain_parquet_tables(spark, lake):
+    # a table written as plain parquet is converted in place on its first
+    # write: untouched rows and partitions must survive every writer
+    from cdk_datalake_analytics_comercial_spark.sources.txlog import is_txlog_table
+
+    schema = "id string, id_pais string, id_periodo int, v int"
+    parts = ["id_pais", "id_periodo"]
+    path = lake.table_path(Layer.DOMAIN, "t_legacy")
+    spark.createDataFrame(
+        [("a", "PE", 202401, 1), ("b", "PE", 202402, 2), ("c", "CO", 202401, 3)],
+        schema,
+    ).write.partitionBy(*parts).parquet(path)
+    merge_upsert(
+        spark,
+        spark.createDataFrame(
+            [("a", "PE", 202401, 10), ("d", "PE", 202401, 40)], schema
+        ),
+        path, keys=["id"], partition_by=parts,
+    )
+    assert is_txlog_table(spark, path)
+    out = tx_read(spark, path).select("id", "id_pais", "id_periodo", "v")
+    assert rows(out) == [
+        ("a", "PE", 202401, 10), ("b", "PE", 202402, 2),
+        ("c", "CO", 202401, 3), ("d", "PE", 202401, 40),
+    ]
+
+    path = lake.table_path(Layer.DOMAIN, "t_legacy_dyn")
+    spark.createDataFrame(
+        [("a", "PE", 202401, 1), ("b", "PE", 202402, 2)], schema
+    ).write.partitionBy(*parts).parquet(path)
+    write_table(
+        spark.createDataFrame([("e", "PE", 202402, 5)], schema), path, parts
+    )
+    out = tx_read(spark, path).select("id", "id_pais", "id_periodo", "v")
+    assert rows(out) == [("a", "PE", 202401, 1), ("e", "PE", 202402, 5)]
+
+    path = lake.table_path(Layer.DOMAIN, "t_legacy_upd")
+    spark.createDataFrame([("a", 1), ("b", 2)], "id string, v int").write.parquet(
+        path
+    )
+    merge_update_only(
+        spark,
+        spark.createDataFrame([("b", 20), ("c", 30)], "id string, v int"),
+        path, keys=["id"],
+    )
+    assert rows(tx_read(spark, path).select("id", "v")) == [("a", 1), ("b", 20)]
+
+    path = lake.table_path(Layer.DOMAIN, "t_legacy_app")
+    spark.createDataFrame([(1,)], "v int").write.parquet(path)
+    insert_into_table(spark.createDataFrame([(2,)], "v int"), path)
+    assert rows(tx_read(spark, path)) == [(1,), (2,)]
 
 
 def test_table_exists(spark, lake):
@@ -168,118 +222,16 @@ def test_table_exists(spark, lake):
     assert table_exists(spark, path)
 
 
-def test_merge_crash_before_swap_leaves_target_intact(spark, lake):
-    # crash-safety contract of _stage_and_swap: if the process dies after
-    # the merge is computed but before the target overwrite starts, the
-    # target is byte-for-byte intact and a rerun completes the merge
-    from unittest import mock
-
-    from cdk_datalake_analytics_comercial_spark.sources import writer as W
-
-    path = lake.table_path(Layer.DOMAIN, "t_crash")
-    target = spark.createDataFrame(
-        [("k1", "PE", 1), ("k2", "PE", 2)], "id string, id_pais string, v int"
-    )
-    write_table(target, path, ["id_pais"])
-    src = spark.createDataFrame([("k2", "PE", 20)], "id string, id_pais string, v int")
-
-    calls = {"n": 0}
-
-    def dying_swap(spark_, staging, p, partition_by=None):
-        # die right before the target overwrite; the staging write already
-        # happened (asserted below) so this is the stage/swap boundary
-        calls["n"] += 1
-        calls["staging_rows"] = spark_.read.parquet(staging).count()
-        raise RuntimeError("simulated crash before target overwrite")
-
-    with mock.patch.object(W, "_overwrite_from_staging", side_effect=dying_swap):
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            merge_upsert(spark, src, path, keys=["id"], partition_by=["id_pais"])
-    assert calls["n"] == 1  # the swap was attempted
-    assert calls["staging_rows"] == 2  # ...with the full merged result staged
-    # target untouched by the failed merge
-    out = spark.read.parquet(path).select("id", "id_pais", "v")
-    assert rows(out) == [("k1", "PE", 1), ("k2", "PE", 2)]
-    # rerunning the same merge (the recovery story) lands the update
-    merge_upsert(spark, src, path, keys=["id"], partition_by=["id_pais"])
-    out = spark.read.parquet(path).select("id", "id_pais", "v")
-    assert rows(out) == [("k1", "PE", 1), ("k2", "PE", 20)]
-
-
-def test_merge_staging_is_durable_and_cleaned(spark, lake):
-    # the merge's overwrite input must come from a durable staging dir (not
-    # executor-memory checkpoint), and the staging dir must be cleaned up
+def test_symlink_manifest_lists_every_data_file(spark, lake):
+    # after a merge the table dir still holds the superseded files; the
+    # manifest must list exactly the current snapshot's files, no others
     import glob
 
-    from cdk_datalake_analytics_comercial_spark.sources import writer as W
-
-    path = lake.table_path(Layer.DOMAIN, "t_stage_clean")
-    write_table(
-        spark.createDataFrame([("a", "PE", 1)], "id string, id_pais string, v int"),
-        path,
-        ["id_pais"],
+    from cdk_datalake_analytics_comercial_spark.sources.txlog import (
+        current_version,
+        read_manifest,
+        tx_delete,
     )
-    from unittest import mock
-
-    # with cleanup disabled, the staging dir must remain on disk as real
-    # parquet files — proof the overwrite's input was durable storage
-    with mock.patch.object(W, "_delete_path", lambda s, p: None):
-        merge_upsert(
-            spark,
-            spark.createDataFrame([("b", "PE", 2)], "id string, id_pais string, v int"),
-            path,
-            keys=["id"],
-            partition_by=["id_pais"],
-        )
-    staged = glob.glob(f"{path}.__merge_staging__*")
-    assert len(staged) == 1
-    assert glob.glob(f"{staged[0]}/*.parquet") or glob.glob(
-        f"{staged[0]}/**/*.parquet", recursive=True
-    )
-    staged_rows = rows(spark.read.parquet(staged[0]).select("id", "id_pais", "v"))
-    assert ("b", "PE", 2) in staged_rows
-    out = spark.read.parquet(path).select("id", "id_pais", "v")
-    assert rows(out) == [("a", "PE", 1), ("b", "PE", 2)]
-    # a normal merge cleans its staging dir
-    merge_upsert(
-        spark,
-        spark.createDataFrame([("c", "PE", 3)], "id string, id_pais string, v int"),
-        path,
-        keys=["id"],
-        partition_by=["id_pais"],
-    )
-    assert glob.glob(f"{path}.__merge_staging__*") == staged  # only the kept one
-
-
-def test_vacuum_reaps_only_stale_staging(spark, lake):
-    from cdk_datalake_analytics_comercial_spark.sources.writer import vacuum
-
-    path = lake.table_path(Layer.DOMAIN, "t_vac")
-    write_table(
-        spark.createDataFrame([("a", "PE", 1)], "id string, id_pais string, v int"),
-        path,
-        ["id_pais"],
-    )
-    # fabricate two orphaned staging dirs: one stale, one fresh
-    stale = f"{path}.__merge_staging__deadbeef"
-    fresh = f"{path}.__merge_staging__cafebabe"
-    for p in (stale, fresh):
-        os.makedirs(p, exist_ok=True)
-        with open(f"{p}/part-00000.parquet", "wb") as f:
-            f.write(b"x")
-    old = 1_600_000_000  # 2020 — well past any retention horizon
-    os.utime(stale, (old, old))
-    removed = vacuum(spark, path, retain_hours=1.0)
-    assert removed == 1
-    assert not os.path.exists(stale)
-    assert os.path.exists(fresh)        # inside the retention horizon
-    assert os.path.exists(path)         # the table itself is never touched
-    # retention 0 reaps the rest
-    assert vacuum(spark, path, retain_hours=-1.0) == 1
-    assert not os.path.exists(fresh)
-
-
-def test_symlink_manifest_lists_every_data_file(spark, lake):
     from cdk_datalake_analytics_comercial_spark.sources.writer import (
         write_symlink_manifest,
     )
@@ -289,27 +241,45 @@ def test_symlink_manifest_lists_every_data_file(spark, lake):
         [("a", "PE", 1), ("b", "CO", 2)], "id string, id_pais string, v int"
     )
     write_table(df, path, ["id_pais"])
+    merge_upsert(
+        spark,
+        spark.createDataFrame([("a", "PE", 10)], "id string, id_pais string, v int"),
+        path,
+        keys=["id"],
+        partition_by=["id_pais"],
+    )
+    on_disk = glob.glob(f"{path}/**/*.parquet", recursive=True)
+    snapshot = {
+        os.path.realpath(f"{path}/{f['path']}")
+        for f in read_manifest(spark, path, current_version(spark, path))["files"]
+    }
+    assert len(on_disk) > len(snapshot)  # the merge superseded a file
     n = write_symlink_manifest(spark, path)
     assert n == 2  # one manifest per partition dir
-    import glob
-
     manifests = sorted(glob.glob(f"{path}/_symlink_format_manifest/**/manifest",
                                  recursive=True))
-    assert len(manifests) == 2
+    assert [m.split("_symlink_format_manifest/")[1] for m in manifests] == [
+        "id_pais=CO/manifest", "id_pais=PE/manifest",
+    ]
     listed = []
     for m in manifests:
         with open(m) as f:
             listed += [line.strip() for line in f if line.strip()]
-    actual = {p for p in glob.glob(f"{path}/id_pais=*/*.parquet")}
-    # every real data file appears exactly once (URIs end with the rel path)
-    assert len(listed) == len(actual)
-    for a in actual:
-        assert any(entry.endswith(a.split(str(lake.root))[-1]) or a in entry
-                   for entry in listed), a
+    assert len(listed) == len(snapshot)
+    assert {os.path.realpath(e.removeprefix("file:")) for e in listed} == snapshot
+    # every listed file sits under its manifest's partition dir
+    for m in manifests:
+        part = m.split("/")[-2]
+        with open(m) as f:
+            assert all(f"/{part}/" in line for line in f if line.strip())
     # the manifest dir itself is excluded from table reads (underscore prefix)
-    assert spark.read.parquet(path).count() == 2
+    assert tx_read(spark, path).count() == 2
     # regenerating replaces, not appends
     assert write_symlink_manifest(spark, path) == 2
+    # whole-file listings cannot hide soft-deleted rows: refused, like Delta
+    tx_delete(spark, path, where={"id": ("b", "b")}, use_dv=True)
+    with pytest.raises(ValueError, match="deletion vectors"):
+        write_symlink_manifest(spark, path)
 
 
 def test_merge_schema_evolution_new_source_column(spark, tmp_path):
@@ -329,7 +299,7 @@ def test_merge_schema_evolution_new_source_column(spark, tmp_path):
         [(2, "B", 20), (3, "c", 30)], "k long, v string, extra int"
     )
     merge_upsert(spark, src, p, keys=["k"], schema_evolution=True)
-    got = {r["k"]: (r["v"], r["extra"]) for r in spark.read.parquet(p).collect()}
+    got = {r["k"]: (r["v"], r["extra"]) for r in tx_read(spark, p).collect()}
     assert got == {1: ("a", None), 2: ("B", 20), 3: ("c", 30)}
 
     # strict mode: an extra source column is dropped, table schema unchanged
@@ -340,7 +310,7 @@ def test_merge_schema_evolution_new_source_column(spark, tmp_path):
         ),
         p, keys=["k"],
     )
-    assert set(spark.read.parquet(p).columns) == {"k", "v", "extra"}
+    assert set(tx_read(spark, p).columns) == {"k", "v", "extra"}
 
 
 def test_merge_schema_evolution_missing_source_column(spark, tmp_path):
@@ -359,5 +329,5 @@ def test_merge_schema_evolution_missing_source_column(spark, tmp_path):
         spark.createDataFrame([(2, "b")], "k long, v string"),
         p, keys=["k"], schema_evolution=True,
     )
-    got = {r["k"]: (r["v"], r["extra"]) for r in spark.read.parquet(p).collect()}
+    got = {r["k"]: (r["v"], r["extra"]) for r in tx_read(spark, p).collect()}
     assert got == {1: ("a", 10), 2: ("b", None)}

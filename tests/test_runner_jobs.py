@@ -18,6 +18,7 @@ from cdk_datalake_analytics_comercial_spark.runner import (
     run_waves,
 )
 from cdk_datalake_analytics_comercial_spark.sources.registry import SchemaRegistry
+from cdk_datalake_analytics_comercial_spark.sources.txlog import tx_read
 
 AS_OF = dt.date(2025, 5, 15)
 
@@ -217,18 +218,18 @@ def test_full_domain_run(spark, lake):
     assert all(r.status == "succeeded" for r in results), results
 
     # m_pais: only countries with companies survive (left_semi)
-    paises = {r["cod_pais"] for r in spark.read.parquet(
+    paises = {r["cod_pais"] for r in tx_read(spark,
         lake.table_path(Layer.DOMAIN, "m_pais")).collect()}
     assert paises == {"PE", "CL"}
 
     # m_compania: conformed + partitioned by id_pais
-    comp = spark.read.parquet(lake.table_path(Layer.DOMAIN, "m_compania"))
+    comp = tx_read(spark, lake.table_path(Layer.DOMAIN, "m_compania"))
     got = {r["id_compania"]: r["id_pais"] for r in comp.collect()}
     assert got == {"10": "PE", "20": "CL"}
     assert dict(comp.dtypes)["fecha_creacion"] == "date"
 
     # t_venta: period window 202503..202505 (3 periods back from as_of)
-    venta = spark.read.parquet(lake.table_path(Layer.DOMAIN, "t_venta"))
+    venta = tx_read(spark, lake.table_path(Layer.DOMAIN, "t_venta"))
     rows = {r["id_venta"]: r for r in venta.collect()}
     # 5-part id_venta (cod_almacen minted in, t_venta.py:91); the CMD doc
     # and the flg_refact='T' doc are filtered out by the P4 guards; the
@@ -272,12 +273,12 @@ def test_rerun_is_idempotent(spark, lake):
     cfgs = parse_config_csv(CONFIG_CSV)
     run_waves(cfgs, DOMAIN_JOBS, make_ctx(spark, lake))
     first = sorted(
-        tuple(r) for r in spark.read.parquet(
+        tuple(r) for r in tx_read(spark,
             lake.table_path(Layer.DOMAIN, "m_compania")).collect()
     )
     run_waves(cfgs, DOMAIN_JOBS, make_ctx(spark, lake))
     second = sorted(
-        tuple(r) for r in spark.read.parquet(
+        tuple(r) for r in tx_read(spark,
             lake.table_path(Layer.DOMAIN, "m_compania")).collect()
     )
     assert first == second
@@ -387,7 +388,7 @@ def test_empty_stage_table_fallback_in_job(spark, lake):
     cfgs = [JobConfig("domain", "m_pais", exe_order=1)]
     results = run_waves(cfgs, DOMAIN_JOBS, make_ctx(spark, lake))
     assert results[0].status == "succeeded", results[0].error
-    out = spark.read.parquet(lake.table_path(Layer.DOMAIN, "m_pais"))
+    out = tx_read(spark, lake.table_path(Layer.DOMAIN, "m_pais"))
     assert out.count() == 0  # no companies → no countries survive
 
 
@@ -525,7 +526,7 @@ def test_t_pedido_ades_anti_union(spark, lake):
 
     res = run_waves([JobConfig("domain", "t_pedido_lite", 1, periods=2)], DOMAIN_JOBS, mk)
     assert res[0].status == "succeeded", res[0].error
-    out = {r["id_pedido"]: r for r in spark.read.parquet(
+    out = {r["id_pedido"]: r for r in tx_read(spark,
         lake.table_path(Layer.DOMAIN, "t_pedido")).collect()}
     # the non-'200' header vanished; P1's two lines collapsed to one row
     assert set(out) == {"10|01|200|P1|C1", "10|01|200|P2|C2", "10|01|200|P9|C9"}
@@ -642,7 +643,7 @@ def test_t_venta_detalle_conditional_aggregates(spark, lake):
     assert res[0].status == "succeeded", res[0].error
     out = {
         (r["id_venta"], r["id_producto"]): r
-        for r in spark.read.parquet(lake.table_path(Layer.DOMAIN, "t_venta_detalle")).collect()
+        for r in tx_read(spark, lake.table_path(Layer.DOMAIN, "t_venta_detalle")).collect()
     }
     fac = out[("10|01|AL1|FAC|1", "A1")]
     assert fac["cant_caja_fisica_ven"] == Decimal("7.000000000000")
@@ -731,7 +732,7 @@ def test_m_articulo_join_ladder_with_missing_masters(spark, lake):
 
     res = run_waves([JobConfig("domain", "m_articulo_lite", 1)], DOMAIN_JOBS, mk)
     assert res[0].status == "succeeded", res[0].error
-    row = spark.read.parquet(lake.table_path(Layer.DOMAIN, "m_articulo")).collect()[0]
+    row = tx_read(spark, lake.table_path(Layer.DOMAIN, "m_articulo")).collect()[0]
     assert row["id_articulo"] == "10|A1"
     assert row["id_pais"] == "PE"
     assert row["desc_linea"] == "BEBIDAS"       # seeded master resolved
@@ -813,7 +814,7 @@ def test_m_estructura_comercial_hierarchy(spark, lake):
 
     res = run_waves([JobConfig("domain", "m_estructura_comercial_lite", 1)], DOMAIN_JOBS, mk)
     assert res[0].status == "succeeded", res[0].error
-    rows = {r["cod_tipo_estructura_comercial"]: r for r in spark.read.parquet(
+    rows = {r["cod_tipo_estructura_comercial"]: r for r in tx_read(spark,
         lake.table_path(Layer.DOMAIN, "m_estructura_comercial")).collect()}
     assert set(rows) == {"Ruta", "Zona", "División", "Subregión", "Región"}
     # every level's parent id IS the next level's node id (adjacency links up)
@@ -866,7 +867,7 @@ def test_m_eje_territorial_levels_and_postal_dedup(spark, lake):
 
     res = run_waves([JobConfig("domain", "m_eje_territorial_lite", 1)], DOMAIN_JOBS, mk)
     assert res[0].status == "succeeded", res[0].error
-    rows = {r["cod_tipo_eje_territorial"]: r for r in spark.read.parquet(
+    rows = {r["cod_tipo_eje_territorial"]: r for r in tx_read(spark,
         lake.table_path(Layer.DOMAIN, "m_eje_territorial")).collect()}
     assert set(rows) == {"NG1", "NG2", "NG3", "NG4"}
     assert rows["NG4"]["nomb_eje_territorial"] == "SURQUILLO"  # cod_ng3 desc wins
@@ -970,7 +971,7 @@ def test_m_cliente_branch_join_and_filtered_type(spark, lake):
 
     res = run_waves([JobConfig("domain", "m_cliente_lite", 1)], DOMAIN_JOBS, mk)
     assert res[0].status == "succeeded", res[0].error
-    rows = {r["cod_cliente"]: r for r in spark.read.parquet(
+    rows = {r["cod_cliente"]: r for r in tx_read(spark,
         lake.table_path(Layer.DOMAIN, "m_cliente")).collect()}
     assert rows["C1"]["coord_x"] == "x9"          # any-sucursal pool, FV1 < FV2 wins
     assert rows["C1"]["tipo_cliente"] == "A"      # a/v/t passes the filter
@@ -1041,7 +1042,7 @@ def test_t_reparto_latest_movement(spark, lake):
 
     res = run_waves([JobConfig("domain", "t_reparto_lite", 1, periods=2)], DOMAIN_JOBS, mk)
     assert res[0].status == "succeeded", res[0].error
-    rows = spark.read.parquet(lake.table_path(Layer.DOMAIN, "t_reparto")).collect()
+    rows = tx_read(spark, lake.table_path(Layer.DOMAIN, "t_reparto")).collect()
     assert len(rows) == 1                              # XXX doc excluded, G1 deduped
     r = rows[0]
     assert r["id_reparto"] == "10|01|A1|GRA|G1"
@@ -1128,7 +1129,7 @@ def test_t_saldos_iniciales_valuation(spark, lake):
     res = run_waves([JobConfig("domain", "t_saldos_iniciales_lite", 1, periods=2)],
                     DOMAIN_JOBS, mk)
     assert res[0].status == "succeeded", res[0].error
-    rows = spark.read.parquet(lake.table_path(Layer.DOMAIN, "t_saldos_iniciales")).collect()
+    rows = tx_read(spark, lake.table_path(Layer.DOMAIN, "t_saldos_iniciales")).collect()
     assert len(rows) == 1                # ALM9 header dropped: unknown approver
     r = rows[0]
     assert r["cant_cajafisica_inicial"] == Decimal("5.0000")
@@ -1141,7 +1142,7 @@ def test_t_saldos_iniciales_valuation(spark, lake):
     assert r["imp_valorizado_ingreso"] == Decimal("40.0000")
     assert r["imp_valorizado_salida"] == Decimal("50.0000")
     assert r["usuario_creacion"] == "ana" and r["es_eliminado"] == "0"
-    assert dict(spark.read.parquet(
+    assert dict(tx_read(spark,
         lake.table_path(Layer.DOMAIN, "t_saldos_iniciales")).dtypes
     )["imp_valorizado_mn"] == "decimal(30,4)"
 
@@ -1378,7 +1379,7 @@ def test_t_pedido_cumplimiento(spark, lake):
         DOMAIN_JOBS, mk,
     )
     assert res[0].status == "succeeded", res[0].error
-    rows = {(r["id_pedido"], r["id_producto"]): r for r in spark.read.parquet(
+    rows = {(r["id_pedido"], r["id_producto"]): r for r in tx_read(spark,
         lake.table_path(Layer.DOMAIN, "t_pedido_cumplimiento")).collect()}
     a1 = rows[("10|01|200|P1|C1", "10|A1")]
     assert a1["id_reparto"] == "10|01|AL1|GRA|900"      # dispatch-doc linkage
@@ -1452,7 +1453,7 @@ def test_t_visita_composite_keys(spark, lake):
 
     res = run_waves([JobConfig("domain", "t_visita_lite", 1, periods=2)], DOMAIN_JOBS, mk)
     assert res[0].status == "succeeded", res[0].error
-    rows = spark.read.parquet(lake.table_path(Layer.DOMAIN, "t_visita")).collect()
+    rows = tx_read(spark, lake.table_path(Layer.DOMAIN, "t_visita")).collect()
     assert len(rows) == 1                          # 2024 visit pruned
     r = rows[0]
     assert r["id_visita"] == "20250510|10|C1|S1|FV1"
@@ -1559,7 +1560,7 @@ def test_t_movimiento_inventario_whitelist_and_transito(spark, lake):
         [JobConfig("domain", "t_movimiento_inventario_lite", 1, periods=2)], DOMAIN_JOBS, mk
     )
     assert res[0].status == "succeeded", res[0].error
-    rows = {r["id_movimiento_almacen"]: r for r in spark.read.parquet(
+    rows = {r["id_movimiento_almacen"]: r for r in tx_read(spark,
         lake.table_path(Layer.DOMAIN, "t_movimiento_inventario")).collect()}
     assert set(rows) == {"MV1", "MV2"}             # ZZZ dropped, no ×2 fan-out
     assert rows["MV1"]["tiene_transito"] == 1
@@ -1613,12 +1614,12 @@ def test_run_waves_retries_flaky_job(spark):
 def test_rows_written_observed_per_job(spark, lake, tmp_path):
     """Every job's status-log line carries the rows it wrote, observed by
     piggybacking count metrics on the job's own write actions (no extra
-    scan) — for both the parquet and txlog write paths."""
+    scan) — on a first run and on a rerun over the existing tables."""
     import json
 
     from cdk_datalake_analytics_comercial_spark.runner import write_status_log
     from cdk_datalake_analytics_comercial_spark.sources.writer import (
-        FORMAT_CONF, merge_upsert, write_table,
+        merge_upsert, write_table,
     )
 
     def writer_job(ctx):
@@ -1642,13 +1643,9 @@ def test_rows_written_observed_per_job(spark, lake, tmp_path):
     line = json.loads(log.read_text().splitlines()[0])
     assert line["rows_written"] == 12 and line["writes"] == 2
 
-    # txlog path observes identically
-    spark.conf.set(FORMAT_CONF, "txlog")
-    try:
-        results = run_waves(
-            [JobConfig("domain", "writer_job", 1)], reg, make_ctx(spark, lake)
-        )
-    finally:
-        spark.conf.unset(FORMAT_CONF)
+    # a rerun over the existing tables observes identically
+    results = run_waves(
+        [JobConfig("domain", "writer_job", 1)], reg, make_ctx(spark, lake)
+    )
     assert results[0].status == "succeeded"
     assert results[0].rows_written == 12

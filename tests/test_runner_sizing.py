@@ -42,7 +42,7 @@ def test_jobs_in_one_wave_run_at_config_sized_parallelism(spark, tmp_path):
     """A master and a fact job in the SAME wave must see different
     effective parallelism, inherit the parent session's runtime conf
     overrides, and carry the worker-class scheduler pool on their thread."""
-    spark.conf.set("spark.datalake.tableFormat", "txlog")  # routing conf
+    spark.conf.set("spark.datalake.test.override", "on")  # runtime override
     try:
         cfgs = parse_config_csv(CONFIG_CSV, layer="domain")
         observed: dict[str, dict] = {}
@@ -67,7 +67,7 @@ def test_jobs_in_one_wave_run_at_config_sized_parallelism(spark, tmp_path):
                     "conf": int(s.conf.get("spark.sql.shuffle.partitions")),
                     "parts": n_parts,
                     "pool": s.sparkContext.getLocalProperty("spark.scheduler.pool"),
-                    "fmt": s.conf.get("spark.datalake.tableFormat", "parquet"),
+                    "override": s.conf.get("spark.datalake.test.override", "off"),
                     "rows": shuffled.count(),
                 }
 
@@ -89,13 +89,12 @@ def test_jobs_in_one_wave_run_at_config_sized_parallelism(spark, tmp_path):
         assert (m["conf"], f["conf"]) == (16, 160)
         assert m["parts"] == 16 and f["parts"] == 160
         assert m["pool"] == "glue-G.1X" and f["pool"] == "glue-G.2X"
-        # parent runtime overrides (the txlog routing switch) survived the
-        # child-session isolation
-        assert m["fmt"] == "txlog" and f["fmt"] == "txlog"
+        # parent runtime overrides survived the child-session isolation
+        assert m["override"] == "on" and f["override"] == "on"
         # ... while the PARENT session's own conf is untouched by sizing
         assert spark.conf.get("spark.sql.shuffle.partitions") not in ("16", "160")
     finally:
-        spark.conf.unset("spark.datalake.tableFormat")
+        spark.conf.unset("spark.datalake.test.override")
 
 
 def test_sizing_off_keeps_shared_session(spark, tmp_path):

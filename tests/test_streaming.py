@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cdk_datalake_analytics_comercial_spark.sources.txlog import tx_read
 from cdk_datalake_analytics_comercial_spark.streaming import windows as W
 
 SCHEMA = T.StructType(
@@ -262,7 +263,7 @@ def test_stream_merge_sink_upserts_and_is_idempotent(spark, tmp_path):
         )
 
     def state():
-        return {r["k"]: r["v"] for r in spark.read.parquet(tgt).collect()}
+        return {r["k"]: r["v"] for r in tx_read(spark, tgt).collect()}
 
     spark.createDataFrame(
         [(1, 1, "a", "p1"), (2, 1, "b", "p1"), (3, 1, "c", "p2")], schema
@@ -304,7 +305,7 @@ def test_merge_upsert_precedence_protects_newer_target(spark, tmp_path):
         spark, spark.createDataFrame([(1, 3, "stale"), (2, 1, "x")], schema),
         tgt, keys=["k"], precedence="seq",
     )
-    got = {r["k"]: (r["seq"], r["v"]) for r in spark.read.parquet(tgt).collect()}
+    got = {r["k"]: (r["seq"], r["v"]) for r in tx_read(spark, tgt).collect()}
     assert got == {1: (5, "new"), 2: (1, "x")}
 
     # equal seq re-send: source wins (>= condition) — idempotent re-apply
@@ -312,7 +313,7 @@ def test_merge_upsert_precedence_protects_newer_target(spark, tmp_path):
         spark, spark.createDataFrame([(1, 5, "resent")], schema), tgt,
         keys=["k"], precedence="seq",
     )
-    got = {r["k"]: (r["seq"], r["v"]) for r in spark.read.parquet(tgt).collect()}
+    got = {r["k"]: (r["seq"], r["v"]) for r in tx_read(spark, tgt).collect()}
     assert got[1] == (5, "resent")
 
 

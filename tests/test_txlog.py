@@ -1321,36 +1321,19 @@ def test_schema_enforcement_on_append(spark, tmp_path):
 
 def test_job_layer_schema_automerge_conf(spark, tmp_path):
     """The job-layer writer mirrors the reference's GLOBAL Delta
-    schema.autoMerge opt-in (`common_jobs_functions.py:116`): evolution is
-    on by default for write_table's txlog route and a session conf flips
-    it back to write-time enforcement."""
-    import pytest
-
+    schema.autoMerge opt-in (`common_jobs_functions.py:116`): write_table
+    always evolves the schema (direct tx_write callers enforce)."""
     from cdk_datalake_analytics_comercial_spark.sources.writer import write_table
 
     p = str(tmp_path / "t")
-    spark.conf.set("spark.datalake.tableFormat", "txlog")
-    try:
-        write_table(spark.createDataFrame([(1, "a")], "k long, v string"), p)
-        # default: autoMerge on — evolved append passes, schema extends
-        write_table(
-            spark.createDataFrame([(2, "b", 1.5)], "k long, v string, x double"),
-            p,
-            mode="append",
-        )
-        assert set(TX.tx_read(spark, p).columns) == {"k", "v", "x"}
-        spark.conf.set("spark.datalake.schemaAutoMerge", "false")
-        with pytest.raises(TX.TxSchemaMismatch, match="schema_evolution=True"):
-            write_table(
-                spark.createDataFrame(
-                    [(3, "c", 1.5, 0)], "k long, v string, x double, y int"
-                ),
-                p,
-                mode="append",
-            )
-    finally:
-        spark.conf.unset("spark.datalake.schemaAutoMerge")
-        spark.conf.unset("spark.datalake.tableFormat")
+    write_table(spark.createDataFrame([(1, "a")], "k long, v string"), p)
+    # autoMerge on — evolved append passes, schema extends
+    write_table(
+        spark.createDataFrame([(2, "b", 1.5)], "k long, v string, x double"),
+        p,
+        mode="append",
+    )
+    assert set(TX.tx_read(spark, p).columns) == {"k", "v", "x"}
 
 
 def test_deletion_vectors(spark, tmp_path):

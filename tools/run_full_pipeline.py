@@ -120,6 +120,7 @@ def run(spark, root: str):
 def main() -> None:
     from cdk_datalake_analytics_comercial_spark.core import get_spark
     from cdk_datalake_analytics_comercial_spark.core.catalog import Catalog, Layer
+    from cdk_datalake_analytics_comercial_spark.sources.reader import read_table
 
     sys.path.insert(0, "tools")
     root = sys.argv[1] if len(sys.argv) > 1 else tempfile.mkdtemp(prefix="lake_full_")
@@ -140,7 +141,7 @@ def main() -> None:
         (Layer.ANALYTICS, "fact_venta_cliente_historico"),
         (Layer.ANALYTICS, "fact_reparto_detalle"),
     ]:
-        df = spark.read.parquet(lake.table_path(layer, table))
+        df = read_table(spark, lake, layer, table)
         print(f"\n{layer.value}/{table}: {df.count()} rows")
         df.show(3, truncate=False)
     print(json.dumps({"failed": len(failed), "succeeded": len(dr + ar) - len(failed)}))
